@@ -1,13 +1,20 @@
 package graft.jobs
 
+import java.io.{ByteArrayInputStream, IOException}
+import java.net.URI
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.zip.{Deflater, DeflaterOutputStream, Inflater, InflaterInputStream}
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path}
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sketch._
 import graft.sketch.agg.SketchFunctions
@@ -27,11 +34,24 @@ case class PartitionSketches(
     kll_len: Array[Byte],
     bloom_conv: Array[Byte])
 
+/** Lineage of one checkpoint group: which chunk, how many rows, how long. */
+case class ChunkLineage(partition_id: Int, rows_seen: Long, wall_ms: Long)
+
+/** One role's merged sketch states (a bucket partial, or the final merge)
+  * and the lineage of every checkpoint group folded into them.
+  */
+case class MergedRole(state: PartitionSketches, lineage: Seq[ChunkLineage])
+
+/** A checkpoint file that does not decode into the chunk its name claims. */
+final class CorruptCheckpointException(val file: String, val offset: Long, reason: String,
+    cause: Throwable = null)
+    extends IOException(s"corrupt checkpoint $file at byte $offset: $reason", cause)
+
 /** The spark-submit main of the north rule: partition-pruned scan → per-input-
   * partition sketching (map-side full combine — the raw 10^12 rows are never
   * shuffled) → per-partition checkpoint files with lineage → distributed
-  * tree merge (Spark partial+final aggregation over the small checkpoint
-  * table) → final per-role results.
+  * two-level tree merge that reads the checkpoints by id → final per-role
+  * results.
   *
   * Resumability: each input partition writes `part-NNNNN.ckpt` atomically
   * (write temp + rename). A re-run with the same input manifest skips
@@ -42,6 +62,9 @@ case class PartitionSketches(
 object SketchJob {
 
   val CkptMagic = 0x47434b50 // "GCKP"
+  private val CkptVersion = 1
+  // role length + rows + wall + six sketch lengths: the least one group takes
+  private val MinGroupBytes = 4 + 8 + 8 + 6 * 4
 
   case class Config(
       input: String,
@@ -75,14 +98,16 @@ object SketchJob {
 
   // ---- checkpoint codec (one file per input partition) ----
 
+  def checkpointPath(dir: Path, pid: Int): Path = new Path(dir, f"part-$pid%05d.ckpt")
+
   private def encodeCkpt(pid: Int, groups: Seq[PartitionSketches]): Array[Byte] = {
     def len(p: PartitionSketches) =
       64 + p.role.length * 3 + Seq(p.hll_conv, p.cms_tool, p.topk_tool,
         p.tdigest_len, p.kll_len, p.bloom_conv).map(_.length + 4).sum
     val bb = ByteBuffer.allocate(24 + groups.map(len).sum).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(CkptMagic); bb.putInt(1); bb.putInt(pid); bb.putInt(groups.size)
+    bb.putInt(CkptMagic); bb.putInt(CkptVersion); bb.putInt(pid); bb.putInt(groups.size)
     groups.foreach { p =>
-      val rb = p.role.getBytes("UTF-8")
+      val rb = p.role.getBytes(UTF_8)
       bb.putInt(rb.length); bb.put(rb)
       bb.putLong(p.rows_seen); bb.putLong(p.wall_ms)
       Seq(p.hll_conv, p.cms_tool, p.topk_tool, p.tdigest_len, p.kll_len, p.bloom_conv)
@@ -91,42 +116,121 @@ object SketchJob {
     val out = new Array[Byte](bb.position()); bb.flip(); bb.get(out); out
   }
 
-  def decodeCkpt(gzBytes: Array[Byte]): Seq[PartitionSketches] = {
-    val in = new java.util.zip.InflaterInputStream(
-      new java.io.ByteArrayInputStream(gzBytes), new java.util.zip.Inflater(), 1 << 16)
-    val bytes = in.readAllBytes()
-    in.close()
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getInt() == CkptMagic, "bad checkpoint magic")
-    require(bb.getInt() == 1, "bad checkpoint version")
-    val pid = bb.getInt()
-    val n = bb.getInt()
-    (0 until n).map { _ =>
-      val rb = new Array[Byte](bb.getInt()); bb.get(rb)
-      val rows = bb.getLong(); val wall = bb.getLong()
-      def arr(): Array[Byte] = { val a = new Array[Byte](bb.getInt()); bb.get(a); a }
-      PartitionSketches(pid, new String(rb, "UTF-8"), rows, wall,
-        arr(), arr(), arr(), arr(), arr(), arr())
+  /** Commits chunk `pid`'s checkpoint: deflate to a temp file, then rename. */
+  def writeCheckpoint(fs: FileSystem, dir: Path, pid: Int,
+      groups: Seq[PartitionSketches]): Unit = {
+    val finalPath = checkpointPath(dir, pid)
+    val tmp = new Path(dir,
+      f"part-$pid%05d.ckpt.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    // level-1 deflate: sketch state is sparse-ish and compresses well;
+    // BEST_SPEED keeps checkpoint cost ~3x cheaper than default gzip
+    val os = new DeflaterOutputStream(fs.create(tmp, true),
+      new Deflater(Deflater.BEST_SPEED), 1 << 16)
+    os.write(encodeCkpt(pid, groups))
+    os.close()
+    if (!fs.rename(tmp, finalPath)) {
+      // a failed rename is only benign if a concurrent attempt already
+      // committed; otherwise fail the task so Spark retries it instead
+      // of silently dropping this partition from the final merge
+      val committed = fs.exists(finalPath)
+      fs.delete(tmp, false)
+      if (!committed) {
+        throw new IOException(
+          s"checkpoint commit failed for partition $pid: rename($tmp -> $finalPath)")
+      }
     }
   }
 
-  /** Stage 1: sketch every input partition, checkpointing each one atomically;
-    * partitions already checkpointed are skipped (resume).
+  /** Decodes chunk `pid`'s deflated checkpoint; `file` names it in errors.
+    * Every length is checked against the bytes left before anything is
+    * allocated, and the header must name chunk `pid`: the merge opens files
+    * by id, so a chunk copied over another id's file would count twice.
+    * Any defect throws [[CorruptCheckpointException]].
     */
+  def decodeCkpt(compressed: Array[Byte], pid: Int, file: String): Seq[PartitionSketches] = {
+    val inflater = new Inflater()
+    val bytes =
+      try {
+        val raw = new InflaterInputStream(
+          new ByteArrayInputStream(compressed), inflater, 1 << 16).readAllBytes()
+        if (inflater.getBytesRead != compressed.length) {
+          throw new CorruptCheckpointException(file, inflater.getBytesRead,
+            s"${compressed.length - inflater.getBytesRead} bytes after the deflate stream")
+        }
+        raw
+      } catch {
+        case e: CorruptCheckpointException => throw e
+        case e: IOException => throw new CorruptCheckpointException(file,
+          inflater.getBytesRead, s"deflate stream: ${e.getMessage}", e)
+      } finally inflater.end()
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    def fail(at: Int, why: String) =
+      throw new CorruptCheckpointException(file, at, s"$why (inflated record)")
+    def int(what: String): Int = {
+      if (bb.remaining < 4) fail(bb.position, s"truncated before $what")
+      bb.getInt()
+    }
+    def long(what: String): Long = {
+      if (bb.remaining < 8) fail(bb.position, s"truncated before $what")
+      bb.getLong()
+    }
+    def arr(what: String): Array[Byte] = {
+      val at = bb.position
+      val n = int(s"$what length")
+      if (n < 0 || n > bb.remaining) fail(at, s"$what length $n, ${bb.remaining} bytes left")
+      val a = new Array[Byte](n); bb.get(a); a
+    }
+    val magic = int("magic")
+    if (magic != CkptMagic) fail(0, f"magic 0x$magic%08x")
+    val version = int("version")
+    if (version != CkptVersion) fail(4, s"unsupported version $version")
+    val header = int("partition id")
+    if (header != pid) fail(8, s"header is chunk $header, file name says $pid")
+    val n = int("group count")
+    if (n < 0 || n > bb.remaining / MinGroupBytes) fail(12, s"group count $n")
+    val groups = (0 until n).map { _ =>
+      val role = new String(arr("role"), UTF_8)
+      val rows = long("rows_seen"); val wall = long("wall_ms")
+      PartitionSketches(pid, role, rows, wall, arr("hll_conv"), arr("cms_tool"),
+        arr("topk_tool"), arr("tdigest_len"), arr("kll_len"), arr("bloom_conv"))
+    }
+    if (bb.hasRemaining) fail(bb.position, s"${bb.remaining} trailing bytes")
+    groups
+  }
+
+  /** Reads and decodes chunk `pid`'s checkpoint from `dir`. A checksum
+    * mismatch reported by the filesystem (Hadoop's local and distributed
+    * filesystems keep one) is the same corruption as one found by decoding.
+    */
+  def readCheckpoint(fs: FileSystem, dir: Path, pid: Int): Seq[PartitionSketches] = {
+    val path = checkpointPath(dir, pid)
+    val in = fs.open(path)
+    val bytes =
+      try in.readAllBytes()
+      catch {
+        case e: ChecksumException => throw new CorruptCheckpointException(path.toString,
+          e.getPos, s"filesystem checksum: ${e.getMessage}", e)
+      } finally in.close()
+    decodeCkpt(bytes, pid, path.toString)
+  }
+
   /** The exact DataFrame stage 1 maps over — also used to pin the planned
     * partition count into the manifest (resume correctness depends on the
     * split layout, not just the file list).
     */
   def plannedInput(spark: SparkSession, cfg: Config): DataFrame = {
-    val hasLen = scan(spark, cfg).columns.contains("text_len")
-    val scanned = scan(spark, cfg)
-      .select(col("conv_id"), col("role"), coalesce(col("tool"), lit("")).as("tool"),
-        (if (hasLen) col("text_len") else length(col("text")))
-          .cast("double").as("text_len"))
+    val input = scan(spark, cfg)
+    val len = if (input.columns.contains("text_len")) col("text_len") else length(col("text"))
+    val scanned = input.select(col("conv_id"), col("role"),
+      coalesce(col("tool"), lit("")).as("tool"), len.cast("double").as("text_len"))
     if (cfg.checkpointChunks > 0) scanned.coalesce(cfg.checkpointChunks) else scanned
   }
 
-  /** Stage 1 consumes `InternalRow`s straight off the physical plan
+  /** Stage 1: sketch every partition of the planned input `df`,
+    * checkpointing each one atomically; partitions already checkpointed are
+    * skipped (resume).
+    *
+    * It consumes `InternalRow`s straight off the physical plan
     * (`queryExecution.toRdd`) and hashes each `UTF8String`'s backing memory
     * in place — the same zero-materialization hot path as the native
     * flagship aggregate. Nothing is allocated per row: no encoder tuple, no
@@ -134,23 +238,16 @@ object SketchJob {
     * the shared [[graft.sketch.agg.ToolInterner]], which decodes each
     * distinct pattern once per partition).
     */
-  def buildPartitionSketches(spark: SparkSession, cfg: Config): Unit =
-    buildPartitionSketches(spark, cfg, plannedInput(spark, cfg))
-
-  /** As above, over an already-planned input (so `run` plans the scan once
-    * for the manifest, the partition count and stage 1).
-    */
   def buildPartitionSketches(spark: SparkSession, cfg: Config, df: DataFrame): Unit = {
     val ckptDir = cfg.checkpointDir
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val c = cfg
 
     df.queryExecution.toRdd.mapPartitions { rows =>
       val pid = TaskContext.getPartitionId()
-      val fs = FileSystem.get(new java.net.URI(ckptDir), hadoopConf.value)
-      val finalPath = new Path(ckptDir, f"part-$pid%05d.ckpt")
-      if (fs.exists(finalPath)) Iterator.empty // resumed: already done
+      val fs = FileSystem.get(new URI(ckptDir), hadoopConf.value)
+      val dir = new Path(ckptDir)
+      if (fs.exists(checkpointPath(dir, pid))) Iterator.empty // resumed: already done
       else {
         val t0 = System.nanoTime()
         final class Group {
@@ -196,75 +293,42 @@ object SketchJob {
             g.hll.toBytes, g.cms.toBytes, g.topk.toBytes,
             g.td.toBytes, g.kll.toBytes, g.bloom.toBytes)
         }
-        val tmp = new Path(ckptDir,
-          f"part-$pid%05d.ckpt.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        // level-1 deflate: sketch state is sparse-ish and compresses well;
-        // BEST_SPEED keeps checkpoint cost ~3x cheaper than default gzip
-        val os = new java.util.zip.DeflaterOutputStream(fs.create(tmp, true),
-          new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED), 1 << 16)
-        os.write(encodeCkpt(pid, out))
-        os.close()
-        if (!fs.rename(tmp, finalPath)) {
-          // a failed rename is only benign if a concurrent attempt already
-          // committed; otherwise fail the task so Spark retries it instead
-          // of silently dropping this partition from the final merge
-          val committed = fs.exists(finalPath)
-          fs.delete(tmp, false)
-          if (!committed) {
-            throw new java.io.IOException(
-              s"checkpoint commit failed for partition $pid: rename($tmp -> $finalPath)")
-          }
-        }
+        writeCheckpoint(fs, dir, pid, out)
         Iterator.empty: Iterator[Int]
       }
     }.count() // force execution
   }
 
-  /** Stage 2: distributed tree merge of all checkpoint files. Spark's
-    * partial (map-side) + final aggregation over the checkpoint rows IS the
-    * treeReduce two-level merge — each executor merges its checkpoint shard,
-    * then the d-role final groups merge the partials.
-    */
-  def mergeCheckpoints(spark: SparkSession, cfg: Config): Dataset[PartitionSketches] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.ckpt")
-      .load(cfg.checkpointDir)
-      .select("content")
-      .as[Array[Byte]]
-      .flatMap(decodeCkpt(_))
-  }
-
-  def finalResults(spark: SparkSession, cfg: Config): DataFrame =
-    finalResultsFrom(mergeCheckpoints(spark, cfg))
-
-  /** Level-1 bucket width of the deterministic tree merge: checkpoint rows
-    * with `partition_id` in [k*fanout, (k+1)*fanout) fold together (in id
-    * order) into bucket partial k, then level 2 folds the bucket partials
-    * (in bucket order) into one row per role. At the 100 TB envelope
-    * (~10k checkpoint chunks) this is ~160 level-1 folds of ≤64 states each
-    * — bounded task memory, two shuffles of a table that is ~0.1% of the
-    * input by construction.
+  /** Level-1 bucket width of the tree merge: checkpoints with id in
+    * [k*fanout, (k+1)*fanout) fold together (in id order) into bucket
+    * partial k, then level 2 folds the bucket partials (in bucket order)
+    * into one state per role. At the 100 TB envelope (~10k checkpoint
+    * chunks) this is ~160 level-1 tasks of ≤64 checkpoints each — bounded
+    * task memory, one shuffle of bucket partials. t-digest merge is greedy
+    * clustering, so the tree's shape changes its bytes: the fanout is a
+    * fixed constant, not a tuning knob.
     */
   val MergeFanout = 64
 
-  /** Fold one run of same-(role,bucket) checkpoint rows — already sorted by
-    * partition_id — into a single partial. Decodes each sketch once and
-    * merges in ascending id order, so the result is a pure function of the
-    * run's CONTENTS and the canonical order, never of arrival order.
+  /** One role's running merge. States are decoded from bytes, merged in the
+    * order `add` is called and encoded again by `result`, so a bucket
+    * partial crosses the shuffle as bytes, exactly as a checkpoint does.
     */
-  private def foldRun(first: PartitionSketches,
-      rest: Iterator[PartitionSketches], outPid: Int): PartitionSketches = {
-    var rowsSeen = first.rows_seen
-    var wallMs = first.wall_ms
-    val hll = HllSketch.fromBytes(first.hll_conv)
-    val cms = CmsSketch.fromBytes(first.cms_tool)
-    val topk = SpaceSavingSketch.fromBytes(first.topk_tool)
-    val td = TDigestSketch.fromBytes(first.tdigest_len)
-    val kll = KllSketch.fromBytes(first.kll_len)
-    val bloom = BloomSketch.fromBytes(first.bloom_conv)
-    rest.foreach { r =>
-      rowsSeen += r.rows_seen
+  private final class RoleFold(first: MergedRole) {
+    private val role = first.state.role
+    private var rows = first.state.rows_seen
+    private var wallMs = first.state.wall_ms
+    private val hll = HllSketch.fromBytes(first.state.hll_conv)
+    private val cms = CmsSketch.fromBytes(first.state.cms_tool)
+    private val topk = SpaceSavingSketch.fromBytes(first.state.topk_tool)
+    private val td = TDigestSketch.fromBytes(first.state.tdigest_len)
+    private val kll = KllSketch.fromBytes(first.state.kll_len)
+    private val bloom = BloomSketch.fromBytes(first.state.bloom_conv)
+    private val lineage = mutable.ArrayBuffer(first.lineage: _*)
+
+    def add(m: MergedRole): Unit = {
+      val r = m.state
+      rows += r.rows_seen
       wallMs = math.max(wallMs, r.wall_ms)
       hll.mergeInPlace(HllSketch.fromBytes(r.hll_conv))
       cms.mergeInPlace(CmsSketch.fromBytes(r.cms_tool))
@@ -272,79 +336,81 @@ object SketchJob {
       td.mergeInPlace(TDigestSketch.fromBytes(r.tdigest_len))
       kll.mergeInPlace(KllSketch.fromBytes(r.kll_len))
       bloom.unionInPlace(BloomSketch.fromBytes(r.bloom_conv))
+      lineage ++= m.lineage
     }
-    PartitionSketches(outPid, first.role, rowsSeen, wallMs,
-      hll.toBytes, cms.toBytes, topk.toBytes, td.toBytes, kll.toBytes,
-      bloom.toBytes)
+
+    def result(id: Int): MergedRole = MergedRole(
+      PartitionSketches(id, role, rows, wallMs, hll.toBytes, cms.toBytes,
+        topk.toBytes, td.toBytes, kll.toBytes, bloom.toBytes),
+      lineage.toSeq)
   }
 
-  /** Group a partition's sorted row stream into key runs and fold each. */
-  private def foldSortedRuns(it: Iterator[PartitionSketches],
-      key: PartitionSketches => (String, Int)): Iterator[PartitionSketches] =
-    new Iterator[PartitionSketches] {
-      private val buf = it.buffered
-      def hasNext: Boolean = buf.hasNext
-      def next(): PartitionSketches = {
-        val first = buf.next()
-        val k = key(first)
-        val rest = new Iterator[PartitionSketches] {
-          def hasNext: Boolean = buf.hasNext && key(buf.head) == k
-          def next(): PartitionSketches = buf.next()
-        }
-        foldRun(first, rest, outPid = k._2)
+  /** The merge's one fold, used at both levels: each role's states merge in
+    * the order they arrive, which the caller fixes — checkpoint id order at
+    * level 1, bucket order at level 2.
+    */
+  private def foldByRole(items: Iterator[MergedRole], id: Int): Iterator[MergedRole] = {
+    val folds = mutable.LinkedHashMap.empty[String, RoleFold]
+    items.foreach { m =>
+      folds.get(m.state.role) match {
+        case Some(f) => f.add(m)
+        case None => folds(m.state.role) = new RoleFold(m)
       }
     }
-
-  /** Deterministic two-level tree merge (the north star's "treeReduce-style
-    * two-level merge", made order-canonical): level 1 folds checkpoint rows
-    * in ascending `partition_id` within fixed id-range buckets; level 2
-    * folds the bucket partials in ascending bucket id. The result is a pure
-    * function of the checkpoint CONTENTS.
-    *
-    * Why not `groupBy(role).agg(sketch merge UDAFs)`: Spark merges partial
-    * aggregation states in whatever order map outputs arrive, and even the
-    * INPUT order varies run to run — the wall_ms lineage embedded in each
-    * checkpoint perturbs compressed file sizes, which perturbs the
-    * binaryFile source's size-ordered bin packing. HLL/CMS/Bloom merges are
-    * algebraically order-free so they never noticed, but t-digest merge is
-    * greedy clustering (order-sensitive by construction; reference
-    * t-digest.js:169-188 folds sequentially for the same reason), and KLL /
-    * space-saving share the hazard in adversarial regimes. Observed before
-    * this canonicalization: a spark-submit kill→resume run and its
-    * uninterrupted twin agreed on every count, HLL, CMS, top-k, KLL and
-    * Bloom column bit-for-bit but moved len_p50_td/len_p99_td in the 4th
-    * significant digit — breaking run()'s "resume reproduces the identical
-    * final sketches" contract. With the canonical fold the contract holds
-    * under any arrival order, file packing, or scheduling.
-    */
-  def mergeDeterministic(parts: Dataset[PartitionSketches],
-      fanout: Int = MergeFanout): Dataset[PartitionSketches] = {
-    val bucket = (col("partition_id") / lit(fanout)).cast("int")
-    val level1 = parts
-      .repartition(col("role"), bucket)
-      .sortWithinPartitions(col("role"), col("partition_id"))
-      .mapPartitions(foldSortedRuns(_,
-        r => (r.role, r.partition_id / fanout)))(parts.encoder)
-    level1
-      .repartition(col("role"))
-      .sortWithinPartitions(col("role"), col("partition_id"))
-      .mapPartitions(foldSortedRuns(_, r => (r.role, -1)))(parts.encoder)
+    folds.valuesIterator.map(_.result(id))
   }
 
-  def finalResultsFrom(parts: Dataset[PartitionSketches]): DataFrame = {
+  /** Level 2 sends every bucket partial of a role to one task. */
+  private final class RolePartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key match {
+      case (role: String, _) => Math.floorMod(role.hashCode, numPartitions)
+    }
+  }
+
+  /** Stage 2: the two-level tree merge of checkpoints 0 until `parts` in
+    * `dir` (the north star's "treeReduce-style two-level merge"). Level 1 is
+    * one task per bucket of `fanout` ids; it opens the bucket's checkpoints
+    * by id, in ascending order, and folds each role. Level 2 shuffles the
+    * bucket partials by role, sorted by bucket, and folds them in bucket
+    * order. The fold order is fixed by checkpoint id and bucket id, never by
+    * arrival order, so the merged bytes are a pure function of the
+    * checkpoint contents: t-digest merge is order-sensitive, and a resumed
+    * run must reproduce its uninterrupted twin bit for bit.
+    */
+  def treeMerge(spark: SparkSession, dir: String, parts: Int,
+      fanout: Int = MergeFanout,
+      level2Partitions: Int = 0): RDD[MergedRole] = {
+    val sc = spark.sparkContext
+    val hadoopConf = new SerializableConfiguration(sc.hadoopConfiguration)
+    val buckets = (parts + fanout - 1) / fanout
+    val level2 = if (level2Partitions > 0) level2Partitions else sc.defaultParallelism
+    sc.parallelize(0 until buckets, math.max(buckets, 1))
+      .flatMap { b =>
+        val fs = FileSystem.get(new URI(dir), hadoopConf.value)
+        val ids = (b * fanout until math.min((b + 1) * fanout, parts)).iterator
+        val groups = ids.flatMap(readCheckpoint(fs, new Path(dir), _)).map(g =>
+          MergedRole(g, Seq(ChunkLineage(g.partition_id, g.rows_seen, g.wall_ms))))
+        foldByRole(groups, b).map(m => ((m.state.role, b), m))
+      }
+      .repartitionAndSortWithinPartitions(new RolePartitioner(level2))
+      .mapPartitions(it => foldByRole(it.map(_._2), -1))
+  }
+
+  /** The job's result columns, read out of the merged per-role states;
+    * `carry` columns ride along after them.
+    */
+  def finalResultsFrom(merged: DataFrame, carry: Column*): DataFrame = {
     val fns = SketchFunctions.default
-    mergeDeterministic(parts)
-      .withColumnRenamed("rows_seen", "turns")
-      .select(
-        col("role"), col("turns"),
-        fns.hllCardinality(col("hll_conv")).as("approx_distinct_convs"),
-        fns.topk(col("topk_tool"), lit(5)).as("top5_tools"),
-        fns.cmsQuery(col("cms_tool"), lit("search")).as("cms_search"),
-        fns.cmsQuery(col("cms_tool"), lit("bash")).as("cms_bash"),
-        fns.tdigestQuantile(col("tdigest_len"), lit(0.5)).as("len_p50_td"),
-        fns.tdigestQuantile(col("tdigest_len"), lit(0.99)).as("len_p99_td"),
-        fns.kllQuantile(col("kll_len"), lit(0.5)).as("len_p50_kll"),
-        fns.bloomSize(col("bloom_conv")).as("bloom_conv_size"))
+    merged.select(Seq(
+      col("role"), col("rows_seen").as("turns"),
+      fns.hllCardinality(col("hll_conv")).as("approx_distinct_convs"),
+      fns.topk(col("topk_tool"), lit(5)).as("top5_tools"),
+      fns.cmsQuery(col("cms_tool"), lit("search")).as("cms_search"),
+      fns.cmsQuery(col("cms_tool"), lit("bash")).as("cms_bash"),
+      fns.tdigestQuantile(col("tdigest_len"), lit(0.5)).as("len_p50_td"),
+      fns.tdigestQuantile(col("tdigest_len"), lit(0.99)).as("len_p99_td"),
+      fns.kllQuantile(col("kll_len"), lit(0.5)).as("len_p50_kll"),
+      fns.bloomSize(col("bloom_conv")).as("bloom_conv_size")) ++ carry: _*)
   }
 
   /** Input manifest: guards resume against a changed input/filter AND a
@@ -352,10 +418,11 @@ object SketchJob {
     * resume is only valid when the planner maps the same rows to the same
     * ids — which requires the same file list, the same split-sizing configs,
     * and the same planned partition count. Any drift invalidates.
-    */
-  /** Manifest text plus the planned partition count it embeds (the count
-    * is returned as a value — never re-parsed out of the string, so the
-    * completeness check below cannot silently fail open on format drift).
+    *
+    * Returns the manifest text plus the planned partition count it embeds
+    * (the count is returned as a value — never re-parsed out of the string,
+    * so the completeness check below cannot silently fail open on format
+    * drift).
     */
   private def manifest(spark: SparkSession, cfg: Config, planned: DataFrame): (String, Int) = {
     val files = planned.inputFiles.sorted
@@ -389,9 +456,12 @@ object SketchJob {
         s"${present.filter(_ >= expectedParts).take(5).mkString(",")}")
   }
 
+  /** Runs both stages and writes the per-role results to `cfg.output`, with
+    * a `_metrics.json` sidecar of stage times and per-checkpoint lineage.
+    * Returns the result rows as a local DataFrame.
+    */
   def run(spark: SparkSession, cfg: Config): DataFrame = {
-    val fs = FileSystem.get(
-      new java.net.URI(cfg.checkpointDir), spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(new URI(cfg.checkpointDir), spark.sparkContext.hadoopConfiguration)
     val dir = new Path(cfg.checkpointDir)
     fs.mkdirs(dir)
     val manifestPath = new Path(dir, "_manifest")
@@ -408,41 +478,42 @@ object SketchJob {
     }
     if (!fs.exists(manifestPath)) {
       val os = fs.create(manifestPath, true)
-      os.write(m.getBytes("UTF-8")); os.close()
+      os.write(m.getBytes(UTF_8)); os.close()
     }
 
     val t0 = System.nanoTime()
     buildPartitionSketches(spark, cfg, planned)
     verifyCheckpointsComplete(fs, dir, plannedParts)
     val t1 = System.nanoTime()
-    // one decode pass shared by the final merge and the lineage summary
-    val parts = mergeCheckpoints(spark, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = finalResultsFrom(parts)
+    // one job: both merge levels and the readouts; only the small result
+    // rows and their lineage reach the driver
+    val merged = spark.createDataFrame(treeMerge(spark, cfg.checkpointDir, plannedParts))
+      .select(col("state.*"), col("lineage"))
+    val withLineage = finalResultsFrom(merged, col("lineage"))
+    val rows = withLineage.collect().sortBy(_.getString(0))
+    val schema = StructType(withLineage.schema.init)
+    val res = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.toSeq.init)): _*), schema)
     res.write.mode("overwrite").parquet(cfg.output)
     val t2 = System.nanoTime()
 
-    // lineage + metrics sidecar
-    import spark.implicits._
-    val lineage = parts
-      .groupBy(col("partition_id"))
-      .agg(sum("rows_seen").as("rows_seen"), max("wall_ms").as("wall_ms"))
-      .orderBy("partition_id")
-      .collect()
-    val totalRows = lineage.map(_.getAs[Long]("rows_seen")).sum
+    // lineage + metrics sidecar: per checkpoint, rows summed over its roles
+    val lineage = rows.flatMap(_.getSeq[Row](schema.length))
+      .map(l => (l.getInt(0), l.getLong(1), l.getLong(2)))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (pid, ls) => (pid, ls.map(_._2).sum, ls.map(_._3).max) }
+    val totalRows = lineage.map(_._2).sum
     val json = {
-      val parts = lineage.map { r =>
-        s"""{"partition_id":${r.getAs[Int]("partition_id")},"rows_seen":${r
-            .getAs[Long]("rows_seen")},"wall_ms":${r.getAs[Long]("wall_ms")}}"""
+      val parts = lineage.map { case (pid, rowsSeen, wallMs) =>
+        s"""{"partition_id":$pid,"rows_seen":$rowsSeen,"wall_ms":$wallMs}"""
       }.mkString("[", ",", "]")
       s"""{"stage1_sec":${(t1 - t0) / 1e9},"stage2_sec":${(t2 - t1) / 1e9},""" +
         s""""rows":$totalRows,"throughput_rows_per_sec":${totalRows / ((t2 - t0) / 1e9)},""" +
         s""""partitions":$parts}"""
     }
     val os = fs.create(new Path(cfg.output, "_metrics.json"), true)
-    os.write(json.getBytes("UTF-8")); os.close()
-    parts.unpersist()
-    spark.read.parquet(cfg.output)
+    os.write(json.getBytes(UTF_8)); os.close()
+    res
   }
 
   def main(args: Array[String]): Unit = {

@@ -478,57 +478,60 @@ object ScaleHeadroom {
     }
 
     run("tree_merge_10k_ckpts", 10000L) {
-      // SketchJob.mergeDeterministic at the 100 TB merge envelope: ~10k
-      // checkpoint chunks (the checkpointChunks sizing that keeps checkpoint
-      // volume ~0.1% of a 100 TB input). Each synthetic chunk carries REAL
-      // (small-parameter) sketches whose contents are a pure function of the
-      // chunk id — distinct values across the table, so the merged HLL has a
-      // closed-form truth. PASS requires (a) byte-identical merged states
-      // under an adversarial re-presentation of the same rows (shuffled,
-      // then repartitioned by a non-key) — the order-canonicality contract
-      // proven by SparkIntegrationSpec at 9 chunks, held here at 10,000 —
-      // and (b) every merged per-role HLL within 3σ of its planted distinct
-      // count. Task memory stays O(fanout-run) by construction: the level-1
-      // fold streams one decoded state at a time.
-      import spark.implicits._
+      // SketchJob.treeMerge at the 100 TB merge envelope: ~10k checkpoint
+      // chunks (the checkpointChunks sizing that keeps checkpoint volume
+      // ~0.1% of a 100 TB input), written through stage 1's checkpoint
+      // writer. Each synthetic chunk carries REAL (small-parameter) sketches
+      // whose contents are a pure function of the chunk id — distinct values
+      // across the table, so the merged HLL has a closed-form truth. PASS
+      // requires (a) byte-identical merged states from two level-2
+      // partition counts — the order-canonicality contract proven by
+      // SparkIntegrationSpec against a sequential fold at a few chunks, held
+      // here at 10,000 — and (b) every merged per-role HLL within 3σ of its
+      // planted distinct count. Task memory stays O(fanout) by construction:
+      // level 1 decodes one checkpoint at a time.
+      import java.nio.file.Files
+      import org.apache.hadoop.fs.{FileSystem, Path}
       import graft.jobs.{PartitionSketches, SketchJob}
       import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch, SpaceSavingSketch, TDigestSketch}
       val nCkpt = 10000
       val perRow = 200
-      val parts = spark.range(0, nCkpt, 1, 32).as[Long].map { pidL =>
-        val pid = pidL.toInt
-        val role = s"role_${pid % 4}"
-        val hll = HllSketch()
-        val cms = CmsSketch(512, 5)
-        val topk = SpaceSavingSketch(100)
-        val td = TDigestSketch(100)
-        val kll = KllSketch(200)
-        val bloom = BloomSketch(8192, 5)
-        var i = 0
-        while (i < perRow) {
-          val v = s"v_${pid}_$i"
-          hll.add(v); cms.add(v); topk.add(s"t_${(pid + i) % 37}"); bloom.add(v)
-          val x = ((pid * 31 + i * 7) % 1000).toDouble
-          td.add(x); kll.add(x)
-          i += 1
-        }
-        PartitionSketches(pid, role, perRow.toLong, (pid % 17).toLong,
-          hll.toBytes, cms.toBytes, topk.toBytes, td.toBytes, kll.toBytes,
-          bloom.toBytes)
-      }.persist()
-      parts.count() // materialize so both presentations read the same rows
+      val work = Files.createTempDirectory("headroom-tree-merge")
+      val dir = work.toUri.toString
+      val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
       try {
-        def states(ds: org.apache.spark.sql.Dataset[PartitionSketches]) =
-          SketchJob.mergeDeterministic(ds).collect().sortBy(_.role)
+        spark.sparkContext.parallelize(0 until nCkpt, 32).foreach { pid =>
+          val role = s"role_${pid % 4}"
+          val hll = HllSketch()
+          val cms = CmsSketch(512, 5)
+          val topk = SpaceSavingSketch(100)
+          val td = TDigestSketch(100)
+          val kll = KllSketch(200)
+          val bloom = BloomSketch(8192, 5)
+          var i = 0
+          while (i < perRow) {
+            val v = s"v_${pid}_$i"
+            hll.add(v); cms.add(v); topk.add(s"t_${(pid + i) % 37}"); bloom.add(v)
+            val x = ((pid * 31 + i * 7) % 1000).toDouble
+            td.add(x); kll.add(x)
+            i += 1
+          }
+          SketchJob.writeCheckpoint(FileSystem.get(new java.net.URI(dir), hadoopConf.value),
+            new Path(dir), pid, Seq(PartitionSketches(pid, role, perRow.toLong,
+              (pid % 17).toLong, hll.toBytes, cms.toBytes, topk.toBytes, td.toBytes,
+              kll.toBytes, bloom.toBytes)))
+        }
+        def states(level2Partitions: Int) =
+          SketchJob.treeMerge(spark, dir, nCkpt, level2Partitions = level2Partitions)
+            .map(_.state).collect().sortBy(_.role)
             .map(p => (p.role, p.rows_seen, p.hll_conv.toSeq, p.cms_tool.toSeq,
               p.topk_tool.toSeq, p.tdigest_len.toSeq, p.kll_len.toSeq,
               p.bloom_conv.toSeq)).toSeq
         val m0 = System.nanoTime()
-        val ref = states(parts)
+        val ref = states(64)
         val mergeSec = (System.nanoTime() - m0) / 1e9
-        val shuffled = states(
-          parts.orderBy(rand(7)).repartition(17, col("rows_seen")))
-        val canonical = ref == shuffled
+        val canonical = ref == states(3)
         val truthPerRole = (nCkpt / 4).toLong * perRow
         val sigma = 1.04 / math.sqrt(1 << HllSketch.DefaultP) * truthPerRole
         val hllOk = ref.forall { s =>
@@ -536,7 +539,12 @@ object ScaleHeadroom {
         }
         (f"canonical=$canonical roles=${ref.size} merge=${mergeSec}%.1fs " +
           f"hll_3sigma=$hllOk (truth=$truthPerRole)", canonical && ref.size == 4 && hllOk)
-      } finally parts.unpersist()
+      } finally {
+        val w = Files.walk(work)
+        try w.sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => Files.deleteIfExists(f))
+        finally w.close()
+      }
     }
 
     run("connected_components@2M", 2000000L) {

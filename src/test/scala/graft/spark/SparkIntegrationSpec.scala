@@ -2,12 +2,14 @@ package graft.spark
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.{SaltedAgg, SketchJob, TranscriptGen}
+import graft.jobs.{CorruptCheckpointException, PartitionSketches, SaltedAgg, SketchJob,
+  TranscriptGen}
 import graft.sketch._
 import graft.sketch.agg.SketchFunctions
 
@@ -253,43 +255,124 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new java.io.File(s"$tdir/job-out/_metrics.json").exists())
   }
 
-  test("SketchJob final merge is order-canonical under arbitrary arrival order") {
-    // The bug this pins down, observed through the real spark-submit path:
-    // checkpoint FILES embed wall_ms lineage, so their compressed sizes vary
-    // run to run, which reorders the binaryFile source's size-sorted bin
-    // packing, which reordered the old groupBy.agg merge — t-digest merge is
-    // greedy clustering, so a kill→resume run and its uninterrupted twin
-    // disagreed on len_p50_td/len_p99_td while every order-free sketch
-    // matched bit-for-bit. mergeDeterministic must yield byte-identical
-    // final states for ANY presentation (order, partitioning) of the same
-    // checkpoint rows.
+  test("SketchJob tree merge matches a sequential fold in id order") {
+    // The fold order is the contract: t-digest merge is greedy clustering,
+    // so a merge that followed arrival order (file sizes, shuffle fetch
+    // order) once broke kill→resume identity on len_p50_td/len_p99_td while
+    // every order-free sketch matched. The distributed merge must give the
+    // bytes of an in-driver fold: checkpoints decoded in id order, folded in
+    // buckets of `fanout`, then the buckets folded in order — whatever the
+    // level-2 partitioning.
     val cfg = SketchJob.Config(
       input = s"$tdir/transcripts",
       output = s"$tdir/canon-out",
       checkpointDir = s"$tdir/canon-ckpt")
     SketchJob.run(spark, cfg)
-    val parts = SketchJob.mergeCheckpoints(spark, cfg)
-    assert(parts.select("partition_id").distinct().count() >= 3,
-      "fixture must span several checkpoint partitions")
-    val presentations = Seq(
-      parts,
-      parts.orderBy(col("partition_id").desc).repartition(7),
-      parts.orderBy(rand(42)).coalesce(1),
-      parts.repartition(13, col("rows_seen")))
-    // fanout 2 forces a real two-level tree even on the small fixture
-    def states(ds: org.apache.spark.sql.Dataset[graft.jobs.PartitionSketches]) =
-      SketchJob.mergeDeterministic(ds, fanout = 2).collect().sortBy(_.role)
-        .map(p => (p.role, p.rows_seen, p.hll_conv.toSeq, p.cms_tool.toSeq,
-          p.topk_tool.toSeq, p.tdigest_len.toSeq, p.kll_len.toSeq,
-          p.bloom_conv.toSeq)).toSeq
-    val ref = states(presentations.head)
-    presentations.tail.foreach { p =>
-      assert(states(p) == ref, "merged sketch bytes differ across presentations")
+    val dir = new Path(cfg.checkpointDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val n = fs.listStatus(dir).count(_.getPath.getName.endsWith(".ckpt"))
+    assert(n >= 3, "fixture must span several checkpoint partitions")
+
+    def fold(states: Seq[PartitionSketches]): PartitionSketches = {
+      val f = states.head
+      val hll = HllSketch.fromBytes(f.hll_conv); val cms = CmsSketch.fromBytes(f.cms_tool)
+      val topk = SpaceSavingSketch.fromBytes(f.topk_tool)
+      val td = TDigestSketch.fromBytes(f.tdigest_len); val kll = KllSketch.fromBytes(f.kll_len)
+      val bloom = BloomSketch.fromBytes(f.bloom_conv)
+      states.tail.foreach { r =>
+        hll.mergeInPlace(HllSketch.fromBytes(r.hll_conv))
+        cms.mergeInPlace(CmsSketch.fromBytes(r.cms_tool))
+        topk.mergeInPlace(SpaceSavingSketch.fromBytes(r.topk_tool))
+        td.mergeInPlace(TDigestSketch.fromBytes(r.tdigest_len))
+        kll.mergeInPlace(KllSketch.fromBytes(r.kll_len))
+        bloom.unionInPlace(BloomSketch.fromBytes(r.bloom_conv))
+      }
+      PartitionSketches(f.partition_id, f.role, states.map(_.rows_seen).sum,
+        states.map(_.wall_ms).max, hll.toBytes, cms.toBytes, topk.toBytes, td.toBytes,
+        kll.toBytes, bloom.toBytes)
     }
-    // NOTE deliberately NOT asserted: fanout-invariance. t-digest merge is
-    // greedy clustering, so different tree SHAPES give (deterministically)
-    // different digests — which is why MergeFanout is a fixed constant, not
-    // a tuning knob: determinism is per-shape, and the shape is pinned.
+    def key(p: PartitionSketches) = (p.role, p.rows_seen, p.hll_conv.toSeq,
+      p.cms_tool.toSeq, p.topk_tool.toSeq, p.tdigest_len.toSeq, p.kll_len.toSeq,
+      p.bloom_conv.toSeq)
+    val fanout = 2 // a real two-level tree even on the small fixture
+    val reference = (0 until n).flatMap(SketchJob.readCheckpoint(fs, dir, _))
+      .groupBy(_.role).toSeq.sortBy(_._1).map { case (_, groups) =>
+        key(fold(groups.groupBy(_.partition_id / fanout).toSeq.sortBy(_._1)
+          .map { case (_, bucket) => fold(bucket) }))
+      }
+    Seq(1, 5).foreach { level2 =>
+      val merged = SketchJob.treeMerge(spark, cfg.checkpointDir, n, fanout, level2)
+        .collect()
+      assert(merged.map(_.state).sortBy(_.role).map(key).toSeq == reference,
+        s"tree merge with $level2 level-2 partitions differs from the sequential fold")
+      assert(merged.flatMap(_.lineage).map(_.partition_id).distinct.sorted.toSeq ==
+        (0 until n), "lineage must name every checkpoint")
+    }
+  }
+
+  test("SketchJob checkpoint decode fails with one typed error on corrupt bytes") {
+    val cfg = SketchJob.Config(
+      input = s"$tdir/transcripts",
+      output = s"$tdir/corrupt-out",
+      checkpointDir = s"$tdir/corrupt-ckpt")
+    val good = SketchJob.run(spark, cfg).orderBy("role").collect()
+    val file = new java.io.File(s"$tdir/corrupt-ckpt/part-00000.ckpt")
+    val bytes = Files.readAllBytes(file.toPath)
+    assert(SketchJob.decodeCkpt(bytes, 0, "f").nonEmpty)
+    def rejected(b: Array[Byte], pid: Int = 0): String =
+      intercept[CorruptCheckpointException](SketchJob.decodeCkpt(b, pid, "part-00000.ckpt"))
+        .getMessage
+    // on-disk damage: deflate framing and its checksum catch it
+    assert(rejected(bytes.take(bytes.length / 2)).contains("part-00000.ckpt"))
+    Seq(0, 2, bytes.length / 2, bytes.length - 1).foreach { i =>
+      val flipped = bytes.clone(); flipped(i) = (flipped(i) ^ 0x10).toByte
+      rejected(flipped)
+    }
+    rejected(bytes :+ 0.toByte)
+    // a well-deflated but malformed record: every length is checked first
+    val raw = new java.util.zip.InflaterInputStream(
+      new java.io.ByteArrayInputStream(bytes)).readAllBytes()
+    def deflate(r: Array[Byte]): Array[Byte] = {
+      val bo = new java.io.ByteArrayOutputStream()
+      val os = new java.util.zip.DeflaterOutputStream(bo); os.write(r); os.close()
+      bo.toByteArray
+    }
+    def withInt(at: Int, v: Int): Array[Byte] = {
+      val r = raw.clone()
+      java.nio.ByteBuffer.wrap(r).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(at, v)
+      r
+    }
+    assert(rejected(deflate(withInt(0, 0))).contains("magic"))
+    assert(rejected(deflate(withInt(4, 2))).contains("version"))
+    assert(rejected(deflate(raw), pid = 1).contains("file name says 1"))
+    assert(rejected(deflate(withInt(12, Int.MaxValue))).contains("group count"))
+    // byte 16 is the first role's length prefix
+    Seq(-5, Int.MaxValue).foreach(v => assert(rejected(deflate(withInt(16, v))).contains("length")))
+    rejected(deflate(raw.take(raw.length - 3)))
+    assert(rejected(deflate(raw.take(14))).contains("truncated before group count"))
+    assert(rejected(deflate(raw :+ 7.toByte)).contains("trailing"))
+
+    // a chunk copied over another id's file is refused, not counted twice:
+    // first by the local filesystem's checksum sidecar, then, with that
+    // gone, by the header's chunk id
+    val second = new java.io.File(s"$tdir/corrupt-ckpt/part-00001.ckpt")
+    Files.copy(file.toPath, second.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    def runRejected(): CorruptCheckpointException = {
+      val e = intercept[Exception](SketchJob.run(spark, cfg))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case c: CorruptCheckpointException => c }
+        .getOrElse(fail(s"no CorruptCheckpointException in $e"))
+    }
+    val byChecksum = runRejected()
+    assert(byChecksum.file.endsWith("part-00001.ckpt"))
+    assert(byChecksum.getMessage.contains("checksum"), byChecksum.getMessage)
+    assert(new java.io.File(s"$tdir/corrupt-ckpt/.part-00001.ckpt.crc").delete())
+    val byHeader = runRejected()
+    assert(byHeader.file.endsWith("part-00001.ckpt"))
+    assert(byHeader.getMessage.contains("file name says 1"), byHeader.getMessage)
+    // rebuilding the chunk restores the original result
+    assert(second.delete())
+    assert(SketchJob.run(spark, cfg).orderBy("role").collect().toSeq == good.toSeq)
   }
 
   test("many-group agg survives sort-based fallback (buffer serde mid-agg)") {
