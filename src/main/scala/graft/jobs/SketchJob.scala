@@ -149,20 +149,17 @@ object SketchJob {
     */
   def decodeCkpt(compressed: Array[Byte], pid: Int, file: String): Seq[PartitionSketches] = {
     val inflater = new Inflater()
-    val bytes =
-      try {
-        val raw = new InflaterInputStream(
-          new ByteArrayInputStream(compressed), inflater, 1 << 16).readAllBytes()
-        if (inflater.getBytesRead != compressed.length) {
-          throw new CorruptCheckpointException(file, inflater.getBytesRead,
-            s"${compressed.length - inflater.getBytesRead} bytes after the deflate stream")
-        }
-        raw
-      } catch {
-        case e: CorruptCheckpointException => throw e
+    val (bytes, consumed) =
+      try (new InflaterInputStream(new ByteArrayInputStream(compressed), inflater, 1 << 16)
+        .readAllBytes(), inflater.getBytesRead)
+      catch {
         case e: IOException => throw new CorruptCheckpointException(file,
           inflater.getBytesRead, s"deflate stream: ${e.getMessage}", e)
       } finally inflater.end()
+    if (consumed != compressed.length) {
+      throw new CorruptCheckpointException(file, consumed,
+        s"${compressed.length - consumed} bytes after the deflate stream")
+    }
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     def fail(at: Int, why: String) =
       throw new CorruptCheckpointException(file, at, s"$why (inflated record)")
@@ -371,19 +368,17 @@ object SketchJob {
     * `dir` (the north star's "treeReduce-style two-level merge"). Level 1 is
     * one task per bucket of `fanout` ids; it opens the bucket's checkpoints
     * by id, in ascending order, and folds each role. Level 2 shuffles the
-    * bucket partials by role, sorted by bucket, and folds them in bucket
-    * order. The fold order is fixed by checkpoint id and bucket id, never by
+    * bucket partials by role into `level2Partitions` tasks, sorted by
+    * bucket, and folds them in bucket order. The fold order is fixed by checkpoint id and bucket id, never by
     * arrival order, so the merged bytes are a pure function of the
     * checkpoint contents: t-digest merge is order-sensitive, and a resumed
     * run must reproduce its uninterrupted twin bit for bit.
     */
-  def treeMerge(spark: SparkSession, dir: String, parts: Int,
-      fanout: Int = MergeFanout,
-      level2Partitions: Int = 0): RDD[MergedRole] = {
+  def treeMerge(spark: SparkSession, dir: String, parts: Int, level2Partitions: Int,
+      fanout: Int = MergeFanout): RDD[MergedRole] = {
     val sc = spark.sparkContext
     val hadoopConf = new SerializableConfiguration(sc.hadoopConfiguration)
     val buckets = (parts + fanout - 1) / fanout
-    val level2 = if (level2Partitions > 0) level2Partitions else sc.defaultParallelism
     sc.parallelize(0 until buckets, math.max(buckets, 1))
       .flatMap { b =>
         val fs = FileSystem.get(new URI(dir), hadoopConf.value)
@@ -392,7 +387,7 @@ object SketchJob {
           MergedRole(g, Seq(ChunkLineage(g.partition_id, g.rows_seen, g.wall_ms))))
         foldByRole(groups, b).map(m => ((m.state.role, b), m))
       }
-      .repartitionAndSortWithinPartitions(new RolePartitioner(level2))
+      .repartitionAndSortWithinPartitions(new RolePartitioner(level2Partitions))
       .mapPartitions(it => foldByRole(it.map(_._2), -1))
   }
 
@@ -487,7 +482,8 @@ object SketchJob {
     val t1 = System.nanoTime()
     // one job: both merge levels and the readouts; only the small result
     // rows and their lineage reach the driver
-    val merged = spark.createDataFrame(treeMerge(spark, cfg.checkpointDir, plannedParts))
+    val merged = spark.createDataFrame(treeMerge(spark, cfg.checkpointDir, plannedParts,
+        spark.sparkContext.defaultParallelism))
       .select(col("state.*"), col("lineage"))
     val withLineage = finalResultsFrom(merged, col("lineage"))
     val rows = withLineage.collect().sortBy(_.getString(0))

@@ -523,7 +523,7 @@ object ScaleHeadroom {
               kll.toBytes, bloom.toBytes)))
         }
         def states(level2Partitions: Int) =
-          SketchJob.treeMerge(spark, dir, nCkpt, level2Partitions = level2Partitions)
+          SketchJob.treeMerge(spark, dir, nCkpt, level2Partitions)
             .map(_.state).collect().sortBy(_.role)
             .map(p => (p.role, p.rows_seen, p.hll_conv.toSeq, p.cms_tool.toSeq,
               p.topk_tool.toSeq, p.tdigest_len.toSeq, p.kll_len.toSeq,

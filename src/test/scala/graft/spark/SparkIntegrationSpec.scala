@@ -301,7 +301,7 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
           .map { case (_, bucket) => fold(bucket) }))
       }
     Seq(1, 5).foreach { level2 =>
-      val merged = SketchJob.treeMerge(spark, cfg.checkpointDir, n, fanout, level2)
+      val merged = SketchJob.treeMerge(spark, cfg.checkpointDir, n, level2, fanout)
         .collect()
       assert(merged.map(_.state).sortBy(_.role).map(key).toSeq == reference,
         s"tree merge with $level2 level-2 partitions differs from the sequential fold")
